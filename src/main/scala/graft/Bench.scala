@@ -60,29 +60,34 @@ object Bench {
     // failed queries (∞ in every pass) are reported by name, not by a
     // bogus timing; the total covers successes only
     val (failed, timed) = results.partition(_._2.isInfinity)
-    def entries(fmt: Double => String) = timed.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    val queriesJson = timed.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val failedJson =
       if (failed.isEmpty) ""
       else failed.keys.toSeq.sorted.map("\"" + _ + "\"").mkString(",\"failed\":[", ",", "]")
     val total = if (timed.nonEmpty) timed.values.sum else 0.0
-    // Round-over-round readers consumed this line via a bounded TAIL
-    // capture that the 172-query full-precision JSON overflowed (the
-    // per-query map alone is ~4.5 KB at ANY float precision — PERF has
-    // been parse-blind since r15). Two-channel fix, measurement code
-    // untouched: (1) the FULL-precision JSON (with the variance block)
-    // is written to a sidecar file the reader can open whole; (2) stdout
-    // keeps the same one-line schema at 4-decimal seconds, preceded by
-    // the variance block on its own line, so the final line is as small
-    // as the fixed query names allow.
+    // Two channels. Readers take stdout through a bounded tail capture
+    // that the per-query map (~4.5 KB for 172 names at any precision)
+    // overflows, so the map goes to a sidecar only, at full precision
+    // (with the variance block, which also keeps its own stdout line);
+    // the final stdout line carries the total, the failed list and a
+    // pointer to the sidecar. The default sidecar name carries the core
+    // count and scale, so runs at different core counts or scales do not
+    // overwrite each other. Double.toString and Locale.ROOT keep every
+    // number dot-decimal — a comma-decimal default locale would
+    // otherwise write invalid JSON.
+    val sfTag = new java.io.File(sfDir).getName.stripPrefix("sf")
+      .replaceAll("[^A-Za-z0-9._-]", "_")
+    val sidecar = sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON",
+      s"bench_per_query_c${cpus}_sf$sfTag.json")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${entries(_.toString)}$failedJson$varianceJson,"sf":"$sfDir"}"""
-    val sidecar = sys.env.getOrElse("SPARK_GRAFT_BENCH_JSON", "bench_per_query.json")
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$queriesJson$failedJson$varianceJson,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(sidecar),
       (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case _: java.io.IOException => () } // reporting must never fail the bench
     if (varianceJson.nonEmpty) println("{" + varianceJson.drop(1) + "}")
-    println(s"""{"metric":"total","value":${f"$total%.4f"},"unit":"sec","queries":${entries(v => f"$v%.4f")}$failedJson,"sf":"$sfDir"}""")
+    val totalStr = "%.4f".formatLocal(java.util.Locale.ROOT, total)
+    println(s"""{"metric":"total","value":$totalStr,"unit":"sec"$failedJson,"per_query_file":"$sidecar"}""")
     spark.stop()
   }
 }

@@ -75,8 +75,9 @@ object Takedown {
     // incompatible cast. The first add fixes the ledger's type; it
     // must match the family's id column (the probe anti-joins on it).
     val in = ids.toDF("id")
+    val first = !exists(s, prefix)
     val aligned =
-      if (!exists(s, prefix)) in
+      if (first) in
       else {
         val t = s.table(tombTable(prefix)).schema("id").dataType
         if (in.schema("id").dataType == t) in
@@ -99,6 +100,10 @@ object Takedown {
         s"tombstone batch for '$prefix' contains NULL ids (unparseable cast " +
           "to the ledger's id type, or null inputs) — refusing a takedown " +
           "that the probe anti-join could never apply")
+      // no ledger in the catalog, but a killed session may have left its
+      // directory behind: the first append would then fail with
+      // LOCATION_ALREADY_EXISTS
+      if (first) Engine.reclaimManagedTable(s, tombTable(prefix))
       pinned.write.mode("append").format("parquet")
         .saveAsTable(tombTable(prefix))
     } finally pinned.unpersist(blocking = false)

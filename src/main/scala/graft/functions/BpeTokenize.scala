@@ -39,9 +39,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * and within one rank fusions proceed left to right with dead-node
   * checks reproducing the replace-chain's resume-after-fusion rule.
   * [[BpeTokenize.replayWord]] keeps the direct replay as the
-  * reference implementation; BpeTokenizeSpec pins heap == replay
-  * property-wise and BpeServeDepthBench measures the separation at
-  * depth.
+  * reference implementation; TokenizeExprSpec pins heap == replay
+  * property-wise.
   *
   * Indexing is by CODEPOINT, not UTF-16 unit: the trainer's symbols
   * come from Spark SQL split (codepoint semantics), so the symbol
@@ -202,7 +201,7 @@ object BpeTokenize {
 
   /** The direct merge-chain replay — O(merges × len) per word; the
     * reference implementation the rank-heap is pinned against
-    * (BpeTokenizeSpec property pin, BpeServeDepthBench separation). */
+    * (TokenizeExprSpec property pin). */
   private[graft] def replayWord(cps: Array[Int], s: Int, e: Int,
       merges: Seq[(String, String)]): scala.collection.mutable.ArrayBuffer[String] = {
     var syms = new scala.collection.mutable.ArrayBuffer[String](math.max(e - s, 0))

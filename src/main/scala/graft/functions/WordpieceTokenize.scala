@@ -82,9 +82,8 @@ object WordpieceTokenize {
       WordpieceTokenize(org.apache.spark.sql.GraftColumn.exprOf(text), vocab, maxPieceLen))
 
   /** The vocabulary pre-bifurcated into word-initial and continuation
-    * (`##`-stripped) probe tables — shared by the expression's lazy
-    * state and the depth bench's driver-side timing. */
-  private[graft] def bifurcate(vocab: Map[String, Long])
+    * (`##`-stripped) probe tables for the expression's lazy state. */
+  private def bifurcate(vocab: Map[String, Long])
       : (java.util.HashMap[String, java.lang.Long],
          java.util.HashMap[String, java.lang.Long]) = {
     val ini = new java.util.HashMap[String, java.lang.Long]()
@@ -96,11 +95,8 @@ object WordpieceTokenize {
   }
 
   /** Greedy longest-match over cps[s, e); appends ids, or a single -1
-    * for the whole word when some cursor position has no match.
-    * Static (the BpeTokenize.heapWord pattern) so WpServeDepthBench can
-    * micro-time the serving walk against by-depth vocabularies without
-    * Spark scheduling noise. */
-  private[graft] def greedyWord(cps: Array[Int], s: Int, e: Int,
+    * for the whole word when some cursor position has no match. */
+  private def greedyWord(cps: Array[Int], s: Int, e: Int,
       initial: java.util.HashMap[String, java.lang.Long],
       continuation: java.util.HashMap[String, java.lang.Long],
       maxPieceLen: Int,

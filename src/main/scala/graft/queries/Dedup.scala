@@ -1295,8 +1295,7 @@ object Dedup {
     * input edge (each (hi,lo) survives the v > u filter once), so
     * smallStar's intermediates see at most |E| + |distinct hi| rows —
     * a ≤ 2× row inflation over the deduplicated form, never quadratic,
-    * regardless of hub degree (measured on planted hub/chain graphs in
-    * StarSkewBench). */
+    * regardless of hub degree. */
   private[queries] def largeStar(e: DataFrame): DataFrame = {
     val nbrs = e.select(col("hi").as("u"), col("lo").as("v"))
       .unionAll(e.select(col("lo").as("u"), col("hi").as("v")))

@@ -64,7 +64,7 @@ object Events {
     * sys-prop for specs — forcing it tiny pins the spread branch on the
     * gate corpus; `SPARK_GRAFT_SESSION_SPREAD_ROWS` for a submit).
     * ~250k narrow rows per sort keeps each buffer inside a fair share
-    * of the unified region at any measured octave (EventsProbe). */
+    * of the unified region at any measured octave. */
   private[graft] def sessionSpreadRows: Long =
     sys.props.get("graft.sessionSpreadRows")
       .orElse(sys.env.get("SPARK_GRAFT_SESSION_SPREAD_ROWS"))
@@ -164,7 +164,7 @@ object Events {
       // narrow (3-long-column) exchange to ~36 partitions at the 256×
       // octave, and 32 concurrent ~700k-row sort buffers against one
       // shared pool rotate the sorter (measured: 1.5 GB
-      // memoryBytesSpilled per run, 65 MB disk — EventsProbe). Above
+      // memoryBytesSpilled per run, 65 MB disk). Above
       // the gate, an explicit ~[[sessionSpreadRows]]-rows-per-partition
       // repartition keeps each sort in-grant at any corpus size and
       // SATISFIES the window's required distribution, so the plan still

@@ -29,7 +29,7 @@ import scala.util.matching.Regex
   *      silently losing both bodies. Deliberate fix, noted.
   *   (Former divergence — single-line plan/state span recovery — is
   *   retired: unformatted files now reproduce the reference's fallback,
-  *   utils.go:495-547. See unformattedSpan/fallbackPlanSource.)
+  *   utils.go:495-547. See SpanSource.)
   */
 object Builders {
 
@@ -393,33 +393,47 @@ object Builders {
       t == s""""$blockName": {""" || t == s""""$blockName": ["""
     }
 
-  /** Fallback span (utils.go:495-500): line 1 through the file's total
-    * line count (bufio.Scanner semantics: a trailing newline does not
-    * open a final empty line). */
-  private def unformattedSpan(content: String): (Int, Int) =
-    (1, math.max(content.linesIterator.length, 1))
-
   /** utils.go:510 — Go regexp, `.` not matching newlines, greedy capture
     * backtracking to the LAST `}},"resource_changes"`. */
   private val PlanResourcesRe =
     """"planned_values":\{.*"root_module":\{"resources":(.*)\}\},"resource_changes"""".r
 
-  /** Fallback source (utils.go:502-547): extract the planned_values
-    * resources list by regex, keep the LAST entry whose printed form
-    * contains both match keys, and re-marshal it canonically (Go
-    * json.Marshal key order — our Json.write). Non-plan content (the
-    * regex can't match a state file) yields no source, as in the
-    * reference. */
-  private def fallbackPlanSource(content: String, key1: String, key2: String): Option[String] =
-    PlanResourcesRe.findFirstMatchIn(content).flatMap { m =>
-      Json.parseOpt(m.group(1)) match {
-        case Some(JArr(items)) =>
-          items.collect { case o: JObj => o }
-            .filter { o => val s = o.render; s.contains(key1) && s.contains(key2) }
-            .lastOption.map(_.render)
-        case _ => None
+  /** The span-recovery inputs of one plan/state file. The reference
+    * re-derives each of them per resource; every row of a file shares
+    * them, so each is computed at most once per file, on first use. */
+  private final class SpanSource(content: String) {
+    /** Fallback span (utils.go:495-500): line 1 through the file's total
+      * line count (bufio.Scanner semantics: a trailing newline does not
+      * open a final empty line). */
+    lazy val unformattedSpan: (Int, Int) = (1, math.max(content.linesIterator.length, 1))
+
+    private lazy val lines = content.split("\n", -1)
+
+    /** JSON plan/state source slice — getSourceFromFile (utils.go:552-567)
+      * appends "\n" after EVERY line including the last, so formatted
+      * plan/state sources carry a trailing newline (the HCL getBlock path
+      * joins without one — hclRows' slicing is separate). */
+    def slice(startLine: Int, endLine: Int): Option[String] =
+      if (startLine <= 0 || endLine < startLine) None
+      else nz(lines.slice(startLine - 1, math.min(endLine, lines.length))
+        .map(_ + "\n").mkString)
+
+    /** The printed planned_values resources, extracted by regex; empty
+      * for non-plan content (the regex can't match a state file). */
+    private lazy val fallbackItems: Vector[String] =
+      PlanResourcesRe.findFirstMatchIn(content).flatMap(m => Json.parseOpt(m.group(1))) match {
+        case Some(JArr(items)) => items.collect { case o: JObj => o.render }
+        case _                 => Vector.empty
       }
-    }
+
+    /** Fallback source (utils.go:502-547): the LAST planned_values
+      * resource whose printed form contains both match keys,
+      * re-marshalled canonically (Go json.Marshal key order — our
+      * Json.write). Non-plan content yields no source, as in the
+      * reference. */
+    def fallbackPlanSource(key1: String, key2: String): Option[String] =
+      fallbackItems.findLast(s => s.contains(key1) && s.contains(key2))
+  }
 
   private def planRows(path: String, content: String, withSpans: Boolean): Seq[TfRow] = {
     // span elision reaches the JSON branch too: a pruned read skips the
@@ -430,6 +444,7 @@ object Builders {
         else (Json.parse(content), new java.util.IdentityHashMap[JValue, (Int, Int)]())
       } catch { case e: Exception => return errorRow(path, "plan-json", e) }
     val formatted = withSpans && hasBlockLine(content, "resources")
+    val spanSrc = new SpanSource(content)
     val resources = tree match {
       case o: JObj =>
         o.get("planned_values").collect { case pv: JObj => pv }
@@ -449,11 +464,11 @@ object Builders {
       val (sl, el) =
         if (!withSpans) (0, 0)
         else if (formatted) Option(spans.get(r)).getOrElse((0, 0))
-        else unformattedSpan(content)
+        else spanSrc.unformattedSpan
       val src =
         if (!withSpans) None
-        else if (formatted) sourceSlice(content, sl, el)
-        else fallbackPlanSource(content, address, rtype)
+        else if (formatted) spanSrc.slice(sl, el)
+        else spanSrc.fallbackPlanSource(address, rtype)
       var row = base.copy(table = "resource", name = nz(name), tfType = nz(rtype),
         mode = nz(mode), address = nz(address),
         arguments = args.map(_.render), // plan arguments NOT NullIfEmptyMap'd pre-serialization quirk: empty map renders "{}" → NullIfEmptyMap applies at column level
@@ -485,6 +500,7 @@ object Builders {
     }
     val base = TfRow.empty.copy(path = path)
     val out = Seq.newBuilder[TfRow]
+    val spanSrc = new SpanSource(content)
 
     doc.get("resources").collect { case JArr(items) => items }.foreach { items =>
       val formatted = withSpans && hasBlockLine(content, "resources")
@@ -495,11 +511,11 @@ object Builders {
         val (sl, el) =
           if (!withSpans) (0, 0)
           else if (formatted) Option(spans.get(envelope)).getOrElse((0, 0))
-          else unformattedSpan(content)
+          else spanSrc.unformattedSpan
         val src =
           if (!withSpans) None
-          else if (formatted) sourceSlice(content, sl, el)
-          else fallbackPlanSource(content, rtype, rname)
+          else if (formatted) spanSrc.slice(sl, el)
+          else spanSrc.fallbackPlanSource(rtype, rname)
         val instances = envelope.get("instances").collect { case JArr(is) => is }.getOrElse(Vector.empty)
         instances.collect { case inst: JObj =>
           var row = base.copy(table = "resource", tfType = nz(rtype), name = nz(rname),
@@ -529,10 +545,10 @@ object Builders {
           val (sl, el) =
             if (!withSpans) (0, 0)
             else if (formatted) Option(spans.get(body)).getOrElse((0, 0))
-            else unformattedSpan(content)
+            else spanSrc.unformattedSpan
           val src =
             if (!withSpans) None
-            else if (formatted) sourceSlice(content, sl, el) else None
+            else if (formatted) spanSrc.slice(sl, el) else None
           out += buildOutput(base, oname, body, nzL(sl.toLong), nzL(el.toLong), src)
         case _ =>
       }
@@ -546,7 +562,7 @@ object Builders {
           // startLine is set then reset, and EVERY state variable — even
           // in a pretty-printed file — takes the 1..totalLines fallback
           // with NO source (the plan-shaped regex can't match state)
-          val (sl, el) = if (!withSpans) (0, 0) else unformattedSpan(content)
+          val (sl, el) = if (!withSpans) (0, 0) else spanSrc.unformattedSpan
           val src: Option[String] = None
           var row = base.copy(table = "variable", name = nz(vname),
             startLine = nzL(sl.toLong), endLine = nzL(el.toLong), source = src)
@@ -569,16 +585,4 @@ object Builders {
 
     out.result()
   }
-
-  /** JSON plan/state source slice — getSourceFromFile (utils.go:552-567)
-    * appends "\n" after EVERY line including the last, so formatted
-    * plan/state sources carry a trailing newline (the HCL getBlock path
-    * joins without one — hclRows' slicing is separate). */
-  private def sourceSlice(content: String, startLine: Int, endLine: Int): Option[String] =
-    if (startLine <= 0 || endLine < startLine) None
-    else {
-      val lines = content.split("\n", -1)
-      nz(lines.slice(startLine - 1, math.min(endLine, lines.length))
-        .map(_ + "\n").mkString)
-    }
 }

@@ -14,8 +14,10 @@ import org.apache.spark.sql.functions._
   *     emitting the superset TfRow — one pass serves all seven tables
   *     (the reference parses each file once per table, single-threaded);
   *   - each table is filter + projection over the cached rows Dataset, so
-  *     Catalyst pushes column pruning and predicates (`path = '…'`
-  *     pruning falls out of the lazy plan — A2 for free);
+  *     Catalyst pushes column pruning and predicates; a `path = '…'`
+  *     predicate skips the parse of non-matching files but not their
+  *     read (see [[rows]]) — the DSv2 source (graft.sources.
+  *     TerraformTableProvider) is the path that never opens them;
   *   - everything downstream of the parse stays in whole-stage codegen.
   */
 object Terraform {
@@ -59,9 +61,13 @@ object Terraform {
     * Shape matters for pushdown (A2): the parse is an `explode(udf(...))`
     * generator over the scan's pass-through `path` column — NOT an opaque
     * typed flatMap — so a `path = '…'` predicate pushes below the
-    * Generate all the way into the binaryFile scan (which supports path
-    * filters): non-matching files are neither read nor parsed, the exact
-    * analog of the reference's qual short-circuit (utils.go:45-58). */
+    * Generate into the binaryFile scan. That scan cannot prune by path
+    * (BinaryFileFormat's filter function handles only `length` and
+    * `modificationTime`), so every listed file is still read and the
+    * predicate runs on the scanned rows: non-matching files skip only
+    * the parse. The reference's qual short-circuit (utils.go:45-58), where
+    * non-matching files are never opened, is the DSv2 source's
+    * planning-time pruning (graft.sources.TerraformTableProvider). */
   def rows(spark: SparkSession, paths0: Paths): Dataset[TfRow] = {
     import spark.implicits._
     val paths = paths0.orDefaults
@@ -216,46 +222,6 @@ object Terraform {
     globRegex(glob).matcher(path).matches() || (glob.startsWith("file:") &&
       globRegex(new org.apache.hadoop.fs.Path(glob).toUri.getPath).matcher(path).matches())
 
-  /** Streaming twin of [[rows]] — the real analog of the reference's
-    * file-watch re-query (`steampipe:"watch"` tags, connection_config.go:
-    * 8-11 / SURVEY A21): new or updated files under the watched globs are
-    * parsed incrementally as they appear. Same row schema as batch, so
-    * downstream table projections apply unchanged. */
-  def streamRows(spark: SparkSession, paths0: Paths): Dataset[TfRow] = {
-    import spark.implicits._
-    import org.apache.spark.sql.types._
-    val paths = paths0.orDefaults
-    val binSchema = StructType(Seq(
-      StructField("path", StringType), StructField("modificationTime", TimestampType),
-      StructField("length", LongType), StructField("content", BinaryType)))
-
-    // one stream per glob, unioned — readStream.load takes a single path,
-    // so multi-glob configs mirror the batch read() via unionAll (the
-    // reference watches every configured path; see connection_config.go:
-    // 8-11). Exact duplicate globs dedupe; OVERLAPPING globs (two distinct
-    // patterns matching one file) emit that file's rows once per stream —
-    // batch dedups matched paths, streams cannot without per-file state,
-    // so configure disjoint globs for watch paths.
-    def read(globs: Seq[String], kind: String): Option[Dataset[TfRow]] =
-      Sources.resolve(globs).distinct.map { g =>
-        spark.readStream.format("binaryFile").schema(binSchema).load(g)
-          .select(col("path"), col("content"))
-          .as[(String, Array[Byte])]
-          .flatMap { case (path, bytes) =>
-            val p = stripScheme(path)
-            val k = if (path.endsWith(".tfstate")) FileKind.State else kind
-            Builders.rowsForFile(p, k, new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-          }
-      }.reduceOption(_ unionAll _)
-
-    val streams = Seq(
-      read(paths.configurationFilePaths ++ paths.paths, FileKind.Config),
-      read(paths.planFilePaths, FileKind.Plan),
-      read(paths.stateFilePaths, FileKind.State)).flatten
-    streams.reduceOption(_ unionAll _)
-      .getOrElse(throw new IllegalArgumentException("no watch paths configured"))
-  }
-
   /** Spark 4 Variant helper views (SURVEY §1.2): each table re-published as
     * `<name>_v` with JSON-typed columns parsed to VARIANT, so users query
     * `variant_get(arguments, '$.ami', 'string')` instead of string ops. */
@@ -384,7 +350,8 @@ object Terraform {
     * file changes and the next query re-parses). Drops the cached rows for
     * this session's registered paths and re-registers all seven views, so
     * edits/creates/deletes under the configured globs become visible.
-    * (The continuous analog is [[streamRows]].) */
+    * (The continuous analog is `spark.readStream.format("terraform")`,
+    * graft.sources.TerraformTableProvider's micro-batch stream.) */
   def refresh(spark: SparkSession): Dataset[TfRow] = {
     val prev = registrations.get(spark)
     require(prev != null, "Terraform.refresh: no prior Terraform.register for this session")

@@ -47,6 +47,19 @@ class TakedownSpec extends SparkSpecBase {
     dropFamily("tdt")
   }
 
+  test("first add reclaims a ledger directory orphaned by a killed session") {
+    import spark.implicits._
+    dropFamily("tdo")
+    // a session killed mid-write leaves the ledger's files but no catalog
+    // entry — a bare saveAsTable would fail with LOCATION_ALREADY_EXISTS
+    val orphan = new java.io.File(warehouse, Takedown.tombTable("tdo"))
+    assert(orphan.mkdirs())
+    java.nio.file.Files.writeString(orphan.toPath.resolve("part-00000.parquet"), "torn")
+    Takedown.add(spark, "tdo", Seq(7L).toDF("id"))
+    assert(spark.table("tdo_tomb").collect().map(_.getLong(0)).toSeq == Seq(7L))
+    dropFamily("tdo")
+  }
+
   test("minhash: tombstoned probe == rebuild-without-the-doc; reclaim purges files, adjusts counts, clears") {
     import spark.implicits._
     dropFamily("tdm", "_sig", "_keys", "_counts")

@@ -6,50 +6,83 @@ import java.nio.file.{Files, Paths => JPaths, StandardCopyOption}
 
 class TerraformStreamSpec extends SparkSpecBase {
 
+  /** Copy a fixture into a watched directory: staged in a directory no
+    * glob watches, mtime rewound to `modMs`, then atomically renamed in,
+    * so a live stream never observes a half-written file or its fresh
+    * intermediate mtime. */
+  private def drop(fixture: String, dir: java.io.File, modMs: Long): Unit = {
+    val name = JPaths.get(fixture).getFileName.toString
+    val staged = Files.createTempDirectory("tfstage").resolve(name)
+    Files.copy(JPaths.get(fixture), staged)
+    assert(staged.toFile.setLastModified(modMs))
+    Files.move(staged, JPaths.get(dir.getAbsolutePath, name), StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Start a memory-sink file-watch on one published table. */
+  private def watch(table: String, globs: Seq[String], queryName: String) =
+    spark.readStream.format("terraform")
+      .option("table", table)
+      .option("configurationFilePaths", globs.mkString(","))
+      .load()
+      .select("name", "path")
+      .writeStream.format("memory").queryName(queryName)
+      .option("checkpointLocation", Files.createTempDirectory(queryName + "-ckpt").toString)
+      .outputMode("append").start()
+
+  private def names(queryName: String): Seq[String] =
+    spark.table(queryName).collect().map(_.getString(0)).sorted.toSeq
+
   test("file-watch stream (A21): new .tf files are parsed incrementally") {
     val watchDir = Files.createTempDirectory("tfwatch").toFile
     watchDir.deleteOnExit()
-    val stream = Terraform.streamRows(spark,
-      Terraform.Paths(configurationFilePaths = Seq(watchDir.getAbsolutePath)))
-    val q = stream.toDF().writeStream.format("memory")
-      .queryName("tf_watch").outputMode("append").start()
+    val glob = Seq(s"${watchDir.getAbsolutePath}/*.tf")
+    val res = watch("terraform_resource", glob, "tf_watch_res")
+    val mods = watch("terraform_module", glob, "tf_watch_mod")
     try {
-      q.processAllAvailable()
-      assert(spark.table("tf_watch").count() == 0)
+      res.processAllAvailable(); mods.processAllAvailable()
+      assert(names("tf_watch_res").isEmpty && names("tf_watch_mod").isEmpty)
 
-      Files.copy(JPaths.get("fixtures/main.tf"),
-        JPaths.get(watchDir.getAbsolutePath, "main.tf"), StandardCopyOption.REPLACE_EXISTING)
-      q.processAllAvailable()
-      val n1 = spark.table("tf_watch").filter(col("table") === "resource").count()
-      assert(n1 == 3, s"expected 3 config resources, got $n1")
+      drop("fixtures/main.tf", watchDir, 1000000L)
+      res.processAllAvailable(); mods.processAllAvailable()
+      assert(names("tf_watch_res") == Seq("app_server", "trail", "worker"))
+      assert(names("tf_watch_mod") == Seq("vpc"))
 
-      Files.copy(JPaths.get("fixtures/second.tf"),
-        JPaths.get(watchDir.getAbsolutePath, "second.tf"), StandardCopyOption.REPLACE_EXISTING)
-      q.processAllAvailable()
-      val mods = spark.table("tf_watch").filter(col("table") === "module").count()
-      assert(mods == 3, s"expected 3 modules after second file, got $mods") // vpc + s3_bucket + net
-    } finally q.stop()
+      drop("fixtures/second.tf", watchDir, 2000000L)
+      res.processAllAvailable(); mods.processAllAvailable()
+      assert(names("tf_watch_res") == Seq("app_server", "trail", "worker"))
+      assert(names("tf_watch_mod") == Seq("net", "s3_bucket", "vpc"))
+    } finally { res.stop(); mods.stop() }
   }
 
   test("file-watch stream unions ALL configured globs, not just the first") {
     val dirA = Files.createTempDirectory("tfwatchA").toFile
     val dirB = Files.createTempDirectory("tfwatchB").toFile
     dirA.deleteOnExit(); dirB.deleteOnExit()
-    val stream = Terraform.streamRows(spark, Terraform.Paths(
-      configurationFilePaths = Seq(dirA.getAbsolutePath, dirB.getAbsolutePath)))
-    val q = stream.toDF().writeStream.format("memory")
-      .queryName("tf_watch_multi").outputMode("append").start()
+    val q = watch("terraform_module",
+      Seq(s"${dirA.getAbsolutePath}/*.tf", s"${dirB.getAbsolutePath}/*.tf"), "tf_watch_multi")
     try {
-      Files.copy(JPaths.get("fixtures/main.tf"),
-        JPaths.get(dirA.getAbsolutePath, "main.tf"), StandardCopyOption.REPLACE_EXISTING)
-      Files.copy(JPaths.get("fixtures/second.tf"),
-        JPaths.get(dirB.getAbsolutePath, "second.tf"), StandardCopyOption.REPLACE_EXISTING)
+      // distinct mtimes: a micro-batch between the two drops must not
+      // raise the watermark to the second file's mtime
+      drop("fixtures/main.tf", dirA, 1000000L)
+      drop("fixtures/second.tf", dirB, 2000000L)
       q.processAllAvailable()
-      val t = spark.table("tf_watch_multi")
-      // main.tf (dirA) carries resources; second.tf (dirB) carries modules —
-      // both must appear, proving the second glob is watched too
-      assert(t.filter(col("table") === "resource").count() >= 3, "dirA rows missing")
-      assert(t.filter(col("table") === "module").count() >= 1, "dirB rows missing")
+      // main.tf (dirA) carries vpc; second.tf (dirB) carries s3_bucket and
+      // net — rows from both prove the second glob is watched too
+      assert(names("tf_watch_multi") == Seq("net", "s3_bucket", "vpc"))
+      val paths = spark.table("tf_watch_multi").collect().map(_.getString(1)).toSet
+      assert(paths == Set(s"${dirA.getAbsolutePath}/main.tf", s"${dirB.getAbsolutePath}/second.tf"))
+    } finally q.stop()
+  }
+
+  test("file-watch stream: a file matched by two overlapping globs arrives once") {
+    val dir = Files.createTempDirectory("tfwatchOverlap").toFile
+    dir.deleteOnExit()
+    val q = watch("terraform_resource",
+      Seq(s"${dir.getAbsolutePath}/*.tf", s"${dir.getAbsolutePath}/main.*"), "tf_watch_overlap")
+    try {
+      drop("fixtures/main.tf", dir, 1000000L)
+      q.processAllAvailable()
+      assert(names("tf_watch_overlap") == Seq("app_server", "trail", "worker"))
     } finally q.stop()
   }
 
